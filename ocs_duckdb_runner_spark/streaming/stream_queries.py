@@ -20,6 +20,7 @@ by the multi-batch unit test in tests/test_streaming.py instead.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +29,9 @@ from pyspark.sql import types as T
 
 from ocs_duckdb_runner_spark.exactness import fx_sum, sql_fx_sum
 from ocs_duckdb_runner_spark.registry import load_table, query
+
+_log = logging.getLogger(__name__)
+
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -43,6 +47,26 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
 
 
 _COUNTER = {"n": 0}
+
+
+def _is_dir(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` is a directory, asked through the Hadoop
+    FileSystem API so object-store paths resolve too. If the FS lookup
+    itself fails, the cause is logged and the driver-local
+    ``os.path.isdir`` answers instead."""
+    try:
+        jvm = spark.sparkContext._jvm
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        return fs.getFileStatus(hpath).isDirectory()
+    except Exception as ex:  # noqa: BLE001 — logged, then the local probe
+        _log.warning(
+            "Hadoop FS layout probe failed for %s (%r); "
+            "falling back to os.path.isdir",
+            path,
+            ex,
+        )
+        return os.path.isdir(path)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,24 +88,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     s3a:// sf_dir with the directory layout silently hit the
     glob-filter branch and streamed zero rows — reproduced, then fixed,
     against the live loopback s3a endpoint (S3AWIDTH_r13.json)."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     events_path = f"{sf_dir}/events.parquet"
 
-    def _is_dir(path: str) -> bool:
-        try:
-            jvm = spark.sparkContext._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(
-                spark.sparkContext._jsc.hadoopConfiguration()
-            )
-            return fs.getFileStatus(hpath).isDirectory()
-        except Exception:
-            return os.path.isdir(path)
-
     def _source(schema: T.StructType) -> DataFrame:
-        if _is_dir(events_path):
+        if _is_dir(spark, events_path):
             # directory-parquet: stream the part files directly
             return spark.readStream.schema(schema).parquet(events_path)
         # single file: the file source requires a directory; glob-filter
@@ -200,10 +211,17 @@ def _stream_shuffle_width(spark: SparkSession, sf_dir: str) -> int:
             spark.sparkContext._jsc.hadoopConfiguration()
         )
         size = fs.getContentSummary(hpath).getLength()
-    except Exception:
+    except Exception as ex:  # noqa: BLE001 — logged, then fail wide
         # Unknown/unreadable source: fail WIDE (session parallelism),
         # never narrow — an over-wide stateful shuffle costs near-empty
         # state-store commits; an under-wide one serializes the drain.
+        _log.warning(
+            "cannot size stream source %s (%r); using session "
+            "parallelism %d as the state-shuffle width",
+            path,
+            ex,
+            parallelism,
+        )
         return parallelism
     return max(1, min(parallelism, -(-size // _STREAM_TARGET_BYTES)))
 

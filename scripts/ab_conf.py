@@ -65,7 +65,7 @@ def main() -> int:
             print(f"unknown query: {name}", file=sys.stderr)
             return 2
         rows = {"query": name, "conf": args.conf, "a": [], "b": []}
-        for arm, val in (("a", args.a), ("b", args.b)):
+        for val in (args.a, args.b):
             _set(val)
             _run(name, warm)      # codegen for this arm's plan shape
             _run(name, args.sf)   # untimed probe-sf warm-up
@@ -75,7 +75,11 @@ def main() -> int:
                 rows[arm].append(_run(name, args.sf))
         rows["median_a"] = round(statistics.median(rows["a"]), 3)
         rows["median_b"] = round(statistics.median(rows["b"]), 3)
-        rows["b_over_a"] = round(rows["median_b"] / rows["median_a"], 3)
+        rows["b_over_a"] = (
+            round(rows["median_b"] / rows["median_a"], 3)
+            if rows["median_a"]
+            else None
+        )
         print(json.dumps(rows), flush=True)
     return 0
 

@@ -3,10 +3,12 @@ for the operators this round touched."""
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pytest
 
+from ocs_duckdb_runner_spark.streaming import stream_queries as _sq
 from ocs_duckdb_runner_spark.streaming.stream_queries import (
     _STREAM_TARGET_BYTES,
     _stream_shuffle_width,
@@ -36,6 +38,8 @@ def test_stream_width_nonlocal_scheme_fails_wide(spark):
     back to session parallelism (fail WIDE), never to width 1 — the old
     os.path branch collapsed every JVM-stateful drain to a single
     partition for any object-store source."""
+    if spark.sparkContext.defaultParallelism == 1:
+        pytest.skip("fail-wide cannot be told from width 1 on one core")
     w = _stream_shuffle_width(spark, "nosuchfs://bucket/prefix")
     assert w == spark.sparkContext.defaultParallelism
     assert w > 1
@@ -46,6 +50,32 @@ def test_stream_width_missing_local_path_fails_wide(spark):
     fallback."""
     w = _stream_shuffle_width(spark, "/no/such/dir")
     assert w == spark.sparkContext.defaultParallelism
+
+
+def test_stream_width_fallback_logs_cause(spark, caplog):
+    """The wide fallback is not silent: it logs why the source could not
+    be sized. The local success path logs nothing."""
+    with caplog.at_level(logging.WARNING, logger=_sq.__name__):
+        _stream_shuffle_width(spark, SF_DIR)
+        assert not caplog.records
+        w = _stream_shuffle_width(spark, "nosuchfs://bucket/prefix")
+    assert w == spark.sparkContext.defaultParallelism
+    assert "nosuchfs://bucket/prefix/events.parquet" in caplog.text
+    assert "nosuchfs" in caplog.records[-1].getMessage()
+
+
+def test_stream_layout_probe_fallback_logs_cause(spark, caplog):
+    """read_events_stream's file-vs-directory probe logs the Hadoop FS
+    failure before answering with os.path.isdir; a resolvable path
+    answers through the FS API without a log line."""
+    with caplog.at_level(logging.WARNING, logger=_sq.__name__):
+        assert _sq._is_dir(spark, SF_DIR) is True
+        ev = f"{SF_DIR}/events.parquet"
+        assert _sq._is_dir(spark, ev) == os.path.isdir(ev)
+        assert not caplog.records
+        assert _sq._is_dir(spark, "nosuchfs://bucket/events.parquet") is False
+    assert "nosuchfs://bucket/events.parquet" in caplog.text
+    assert "os.path.isdir" in caplog.text
 
 
 def test_stream_width_env_override(spark, monkeypatch):

@@ -3,7 +3,10 @@ isolation (reference R9-R15 semantics)."""
 
 from __future__ import annotations
 
-from ocs_duckdb_runner_spark.runner import FanoutRunner, split_objects
+import threading
+
+from ocs_duckdb_runner_spark import runner as runner_mod
+from ocs_duckdb_runner_spark.runner import FanoutRunner, split_objects, to_sql
 from tests.conftest import SF_DIR
 
 
@@ -143,14 +146,15 @@ def test_s3a_fanout_smoke(spark):
 
 def test_fanout_per_file_byte_split(spark):
     """R11 per-handle analog: the report splits read bytes per source via
-    per-file job groups + REST stage metrics; the split must cover every
-    file and account for (at least) the total scan bytes of the run."""
+    per-file job groups + status-store stage metrics; the split must cover
+    every file and account for (at least) the total scan bytes of the
+    run."""
     files = _sources(spark)
     rep = FanoutRunner(spark, threads=4).run(files)
     pfb = rep["per_file_bytes"]
     assert set(pfb) == set(files)
     assert all(v > 0 for v in pfb.values())
-    # the split and the total come from the same REST stage metrics, but a
+    # the split and the total come from the same stage metrics, but a
     # concurrent job from another test can land in the total window —
     # require the split to account for the total within 2× rather than
     # exact equality (latent flake, ADVICE r2)
@@ -209,5 +213,115 @@ def test_cli_split_fanout_end_to_end():
     m = re.search(r"== total hits: (\d+)", err)
     assert m and int(m.group(1)) > 0
     assert re.search(r"== total query time: \d+\.\d+ s", err)
-    # CLI session enables the UI, so byte accounting must be real numbers
+    # the CLI runs with the UI off: byte accounting comes from the
+    # in-process status store, so it must still be a real number
     assert re.search(r"== spark read bytes: [1-9]\d*", err)
+
+
+def test_flagship_plan_has_no_exchange(spark):
+    """The per-object plan is exchange-free: the coalesced scan reports a
+    single partition, which satisfies the aggregate and the global sort.
+    The box filter and the column pruning still reach the scan."""
+    df = spark.sql(to_sql(_sources(spark)[0]))
+    df.toArrow()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan
+    assert "Exchange" not in plan
+    assert "PushedFilters: [IsNotNull(l_quantity)" in plan
+    assert (
+        "ReadSchema: struct<l_orderkey:bigint,l_quantity:double,"
+        "l_extendedprice:double,l_discount:double,l_tax:double>"
+    ) in plan
+
+
+def test_fanout_one_job_one_stage_per_object(spark):
+    """A 4-object run submits exactly one job per object, each with one
+    stage, counted through the status tracker."""
+    files = _sources(spark)
+    runner = FanoutRunner(spark, threads=4)
+    rep = runner.run(files)
+    assert rep["failures"] == 0
+    tracker = spark.sparkContext.statusTracker()
+    for i in range(len(files)):
+        jobs = tracker.getJobIdsForGroup(f"{runner._token}:{i}")
+        assert len(jobs) == 1
+        assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+
+
+def test_to_sql_runs_on_duckdb(spark):
+    """perfbench's oracle swaps the literal parquet.`path` reference for
+    read_parquet and runs the rest on DuckDB: the template must keep that
+    literal, and give Spark's per-object hit count there."""
+    import duckdb
+
+    files = _sources(spark)
+    rep = FanoutRunner(spark, threads=4).run(files)
+    con = duckdb.connect()
+    try:
+        for f in files:
+            sql = to_sql(f)
+            assert f"parquet.`{f}`" in sql
+            sql = sql.replace(f"parquet.`{f}`", f"read_parquet('{f}')")
+            got = con.execute(f"SELECT count(*) FROM ({sql})").fetchone()[0]
+            assert got == rep["per_file_hits"][f]
+    finally:
+        con.close()
+
+
+def test_fanout_never_flips_session_conf(spark):
+    """The session is shared with concurrent work: a run must leave the
+    session-global SQL conf alone while it is in flight, not only restore
+    it afterwards."""
+    files = _sources(spark)
+    seen: set[tuple[str, str]] = set()
+    done = threading.Event()
+
+    def _poll() -> None:
+        while not done.is_set():
+            seen.add((
+                spark.conf.get("spark.sql.shuffle.partitions"),
+                spark.conf.get("spark.sql.adaptive.enabled"),
+            ))
+
+    poller = threading.Thread(target=_poll)
+    poller.start()
+    try:
+        FanoutRunner(spark, threads=4).run(files)
+    finally:
+        done.set()
+        poller.join(timeout=30)
+    assert not poller.is_alive()
+    assert seen
+    assert all(parts != "1" for parts, _ in seen)
+    assert all(aqe != "false" for _, aqe in seen)
+
+
+def test_fanout_print_rows_matches_collect(spark, capsys):
+    """--print-rows prints one line per hit, each exactly tuple(row) of
+    the collected result, in the query's order."""
+    f = _sources(spark)[0]
+    want = [str(tuple(r)) for r in spark.sql(to_sql(f)).collect()]
+    capsys.readouterr()
+    rep = FanoutRunner(spark, threads=1, print_rows=True).run([f])
+    out = capsys.readouterr().out.splitlines()
+    assert len(out) == rep["hits"] == len(want) > 0
+    assert out == want
+
+
+def test_fanout_reports_null_bytes_when_status_store_fails(
+    spark, monkeypatch, capsys
+):
+    """A failed status-store read reports null bytes, records and
+    per-file bytes, and says why on stderr — never zeros, never
+    silently."""
+
+    def _boom(*_a, **_k):
+        raise RuntimeError("listener bus timed out")
+
+    monkeypatch.setattr(runner_mod, "_group_io", _boom)
+    rep = FanoutRunner(spark, threads=2).run(_sources(spark))
+    assert rep["hits"] > 0
+    assert rep["read_bytes"] is None
+    assert rep["read_records"] is None
+    assert rep["per_file_bytes"] is None
+    assert "listener bus timed out" in capsys.readouterr().err
