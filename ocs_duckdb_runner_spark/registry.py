@@ -20,6 +20,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ocs_duckdb_runner_spark.session import scoped_conf
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 TABLES = (
@@ -362,11 +364,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     UTC — oracle parity is only defined under UTC timestamp semantics
     (DuckDB is UTC-naive), and it must hold even when the caller's session
     was built elsewhere (e.g. the driver's own SparkSession). The
-    nanosAsLong legacy flag, by contrast, is scoped to the events read and
-    restored: it changes how ANY later ns-timestamp parquet in the same
-    session is typed, which is not this function's call to make (ADVICE
-    r1). Scoping is sound because the flag is consulted when
-    ``spark.read.parquet`` resolves the schema, not at execution time.
+    nanosAsLong legacy flag, by contrast, is set only inside
+    ``scoped_conf`` around the events read: it changes how ANY later
+    ns-timestamp parquet in the same session is typed, which is not this
+    function's call to make (ADVICE r1). Scoping is sound because the
+    flag is consulted when ``spark.read.parquet`` resolves the schema, not
+    at execution time.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
@@ -424,15 +427,8 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
             _EVENTS_TS_BRANCH[key] = "ns"
     # timestamp[ns] footer — Spark refuses it without the legacy flag.
     # The flag is consulted at schema RESOLUTION, so resolve eagerly
-    # inside the scoped set/restore (can't defer to execution).
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
+    # inside scoped_conf (can't defer to execution).
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
         df = spark.read.parquet(path)
         df.schema  # force resolution under the flag
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))

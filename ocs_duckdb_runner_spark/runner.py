@@ -3,10 +3,10 @@
 Reference behavior being reproduced (/root/reference/runner.cc):
 - R9  per-file fan-out: `QueryRunner::AddTask` → fixed pthread pool
       (runner.cc:236-317, pthread-helper.h:112-227). Here: a
-      ThreadPoolExecutor submitting one Spark job per file under the FAIR
-      scheduler — Spark's task scheduler replaces the hand-built pool, and
-      each file's query is an independent job exactly like each file's
-      DuckDB instance was independent.
+      ThreadPoolExecutor submitting one Spark job per file — Spark's task
+      scheduler replaces the hand-built pool, and each file's query is an
+      independent job exactly like each file's DuckDB instance was
+      independent.
 - R10 deterministic seed-1 shuffle of the source list (runner.cc:392).
 - R11/R12 I/O accounting: MonitoredFileSystem counted read_ops/read_bytes
       per S3 handle (runner.cc:56-172) and merged per-task stats under a
@@ -243,11 +243,6 @@ class FanoutRunner:
 
     def _run_one(self, idx_path: tuple[int, str]) -> tuple[str, int]:
         idx, path = idx_path
-        # distinct FAIR pool per slot → jobs schedule round-robin like the
-        # reference's pool threads, not FIFO behind each other
-        self.spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", f"fanout-{idx % self.threads}"
-        )
         # one job group per FILE → _group_io can split bytes per source,
         # the analog of the reference's per-handle ReadStats
         self.spark.sparkContext.setLocalProperty(
@@ -497,7 +492,7 @@ def main(argv: list[str] | None = None) -> int:
         if not sources:
             print("no sources on stdin", file=sys.stderr)
             return 2
-    extra_conf = {"spark.scheduler.mode": "FAIR"}
+    extra_conf: dict[str, str] = {}
     loopback_srv = None
     loopback_root = None
     if args.via_loopback:

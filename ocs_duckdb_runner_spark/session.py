@@ -17,12 +17,16 @@ API note: registry.load_table also re-pins spark.sql.session.timeZone=UTC
 on EVERY call — a deliberate session-wide side effect, because oracle
 parity is only defined under UTC timestamp semantics and must hold even on
 externally built sessions (the driver's own). Callers that need another
-zone must set it after loading, not before.
+zone must set it after loading, not before. Every other conf change goes
+through ``scoped_conf``, the one helper that sets SQL conf and restores it.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -170,3 +174,34 @@ def build_spark(
             hconf.set(k, v)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# One lock for every scoped block, so blocks on different threads never
+# interleave their set and restore steps; reentrant for nested scopes.
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]:
+    """Set ``settings`` on the session for the block, then restore each key
+    that was set: ``unset`` if it had no value before, else its old value.
+
+    The lock is held for the whole block. A stream needs the scope only
+    across ``.start()``, which clones the session for the whole drain, so
+    no drain or ``foreachBatch`` callback runs under the lock. (A child
+    session from ``spark.newSession()`` needs no lock, but its streams
+    report to the child's listeners, not the caller's.)"""
+    with _CONF_LOCK:
+        prior: dict[str, str | None] = {}
+        try:
+            for key, value in settings.items():
+                old = spark.conf.get(key, None)
+                spark.conf.set(key, value)
+                prior[key] = old
+            yield
+        finally:
+            for key, old in prior.items():
+                if old is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, old)

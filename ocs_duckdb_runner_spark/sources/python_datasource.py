@@ -24,9 +24,15 @@ ever passes through the driver.
 
 from __future__ import annotations
 
+import logging
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ocs_duckdb_runner_spark.registry import query
+from ocs_duckdb_runner_spark.session import scoped_conf
+
+_log = logging.getLogger(__name__)
 
 # 8 partitions x 1250 rows; vid * KNUTH stays far below 2^63 so the
 # modulus is exact BIGINT arithmetic in Python, Spark, and DuckDB alike
@@ -284,38 +290,34 @@ def src_python_datasource_pushdown(
     for the Python-source extension point; unit/plan locks live in
     tests/test_python_datasource_pushdown.py.
 
-    spark.sql.python.filterPushdown.enabled is a RUNTIME SQL conf
-    (probed: set/unset both succeed on a live session), so the query
-    set-with-restores it around its own execution — the same try/finally
-    discipline as fn_time_type — and EVERY session, including the
-    driver's own harness session that doesn't pre-set the conf, provably
-    takes the pruned plan (r11 verdict Next #5; previously the pruned
-    path was proven only in the builder's session and unit locks). The
-    frame is eagerly localCheckpoint-ed BEFORE the conf restores:
-    pushFilters fires at planning, and Spark 4.1 hard-errors on a
-    pushFilters reader under a disabled conf
-    (DATA_SOURCE_PUSHDOWN_DISABLED), so a lazily returned plan would
-    execute after the restore and die. 1,879 rows — checkpoint cost is
+    spark.sql.python.filterPushdown.enabled is a RUNTIME SQL conf (probed:
+    set/unset both succeed on a live session), so the query sets it under
+    ``scoped_conf`` around its own execution, and EVERY session, including
+    the driver's own harness session that doesn't pre-set the conf, provably
+    takes the pruned plan (r11 verdict Next #5; previously the pruned path
+    was proven only in the builder's session and unit locks). The frame is
+    eagerly localCheckpoint-ed BEFORE the conf restores: pushFilters fires
+    at planning, and Spark 4.1 hard-errors on a pushFilters reader under a
+    disabled conf (DATA_SOURCE_PUSHDOWN_DISABLED), so a lazily returned plan
+    would execute after the restore and die. 1,879 rows — checkpoint cost is
     nil. If the conf somehow can't be set (a cluster with a locked-down
-    conf), the query degrades to the plain pushdown-free source and
-    Spark evaluates the same predicates post-scan — same rows, plain
-    plan (tests pin both shapes)."""
+    conf), the query logs why and degrades to the plain pushdown-free
+    source, and Spark evaluates the same predicates post-scan — same rows,
+    plain plan (tests pin both shapes)."""
     key = "spark.sql.python.filterPushdown.enabled"
-    try:
-        prior = spark.conf.get(key)
-        spark.conf.set(key, "true")
-    except Exception:
-        spark.dataSource.register(_make_source())
-        return _pushdown_predicates(
-            spark.read.format("ocs_synth_telemetry")
-            .option("parts", str(N_PARTS))
-            .option("rows", str(ROWS_PER_PART))
-            .load()
-        )
-    try:
+    with ExitStack() as scope:
+        try:
+            scope.enter_context(scoped_conf(spark, {key: "true"}))
+        except Exception as ex:  # noqa: BLE001 — logged, then plain source
+            _log.warning("cannot set %s (%r); reading the plain source", key, ex)
+            spark.dataSource.register(_make_source())
+            return _pushdown_predicates(
+                spark.read.format("ocs_synth_telemetry")
+                .option("parts", str(N_PARTS))
+                .option("rows", str(ROWS_PER_PART))
+                .load()
+            )
         return _pushdown_plan(spark).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(key, prior)
 
 
 def _pushdown_plan(spark: SparkSession) -> DataFrame:
@@ -476,7 +478,9 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    return spark.table(name)
+    out = spark.table(name)  # holds the rows; the view would pin them
+    spark.catalog.dropTempView(name)
+    return out
 
 
 # ---- writer variant (custom sink with commit protocol) ----

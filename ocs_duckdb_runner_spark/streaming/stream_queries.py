@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 
 from ocs_duckdb_runner_spark.exactness import fx_sum, sql_fx_sum
 from ocs_duckdb_runner_spark.registry import load_table, query
+from ocs_duckdb_runner_spark.session import scoped_conf
 
 _log = logging.getLogger(__name__)
 
@@ -108,8 +109,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:  # ns footer — batch read refuses without legacy flag
         ts_type = None
     if ts_type is None:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = _source(_events_schema(T.LongType()))
+        # scoped to building the source: it carries its own LongType
+        # schema, and the running stream reads the ns column as long
+        # without the flag (checked on Spark 4.1)
+        with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
+            raw = _source(_events_schema(T.LongType()))
         return raw.withColumn(
             "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
         )
@@ -117,9 +121,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if isinstance(ts_type, T.TimestampNTZType):
         raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     elif isinstance(ts_type, T.LongType):
-        # ns fixture probed *after* a prior call set nanosAsLong: the footer
-        # resolves as raw nanosecond longs — normalize exactly like the
-        # except-branch (and registry.load_table's LongType dispatch) does.
+        # ns fixture probed while the caller's session has nanosAsLong set:
+        # the footer resolves as raw nanosecond longs — normalize exactly
+        # like the except-branch (and registry.load_table's LongType
+        # dispatch) does.
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return raw
 
@@ -226,64 +231,43 @@ def _stream_shuffle_width(spark: SparkSession, sf_dir: str) -> int:
     return max(1, min(parallelism, -(-size // _STREAM_TARGET_BYTES)))
 
 
-class _scoped_stream_shuffle:
-    """Set spark.sql.shuffle.partitions to the input-derived stream width
-    for the duration of one stream drain, restoring the session value on
-    the way out (the fn_time_type try/finally conf discipline).
-
-    SEQUENTIAL-DRAIN ASSUMPTION (ADVICE r12): this mutates the
-    session-global conf, so two streams drained CONCURRENTLY in one
-    session would race — one could be planned at the other's width or
-    have its restore clobbered. Every drain in this module runs
-    synchronously on the calling thread (queries()/bench/tests all drain
-    one stream at a time), which is what makes the scoped set/restore
-    sound. If concurrent drains ever become a surface, guard with a
-    module-level lock or move the width onto a per-query conf."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str):
-        self.spark = spark
-        self.width = _stream_shuffle_width(spark, sf_dir)
-
-    def __enter__(self):
-        try:
-            self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        except Exception:
-            self.prev = None
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.width))
-        return self
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
+def _width_conf(spark: SparkSession, sf_dir: str | None) -> dict[str, str]:
+    """The conf a JVM-stateful stream starts under: the input-derived
+    state-shuffle width, or nothing when ``sf_dir`` is None (the
+    Python-stateful family keeps the session width)."""
+    if sf_dir is None:
+        return {}
+    width = _stream_shuffle_width(spark, sf_dir)
+    return {"spark.sql.shuffle.partitions": str(width)}
 
 
-def _run_to_memory(agg: DataFrame, mode: str, sf_dir: str | None = None) -> str:
+def _run_to_memory(
+    agg: DataFrame, mode: str, sf_dir: str | None = None
+) -> DataFrame:
     """Drive a streaming aggregation to completion against the memory sink
-    (single micro-batch over the fixture file) and return the table name.
-    When ``sf_dir`` is given, the drain runs under the input-derived
-    stateful-shuffle width (see _stream_shuffle_width)."""
+    (single micro-batch over the fixture file) and return the sink's rows.
+
+    The width conf (see _width_conf) is scoped to ``.start()`` only: the
+    query clones the session there and keeps that conf for the whole
+    drain, so the session is back at its own width while the stream
+    runs. The sink's temp view is dropped once the frame is resolved —
+    the frame holds the sink's rows by itself, and a view left behind
+    would pin them for the life of the session."""
+    spark = agg.sparkSession
     _COUNTER["n"] += 1
     name = f"stream_out_{_COUNTER['n']}"
-
-    def _start_and_drain() -> None:
-        q = (
-            agg.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    if sf_dir is None:
-        _start_and_drain()
-    else:
-        with _scoped_stream_shuffle(agg.sparkSession, sf_dir):
-            _start_and_drain()
-    return name
+    writer = (
+        agg.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+    )
+    with scoped_conf(spark, _width_conf(spark, sf_dir)):
+        q = writer.start()
+    q.awaitTermination()
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @query(
@@ -314,7 +298,7 @@ def stream_tumbling_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "n", "sum_value_c"
         )
     )
-    return spark.table(_run_to_memory(agg, "complete", sf_dir))
+    return _run_to_memory(agg, "complete", sf_dir)
 
 
 @query(
@@ -357,7 +341,7 @@ def stream_sliding_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "n", "sum_value_c"
         )
     )
-    return spark.table(_run_to_memory(agg, "complete", sf_dir))
+    return _run_to_memory(agg, "complete", sf_dir)
 
 
 def _user_totals_state(key, pdfs, state):
@@ -451,7 +435,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-    return spark.table(_run_to_memory(totals, "update"))
+    return _run_to_memory(totals, "update")
 
 
 def transform_with_state_available() -> bool:
@@ -595,7 +579,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="update",
             timeoutConf="NoTimeout",
         )
-    return spark.table(_run_to_memory(totals, "update"))
+    return _run_to_memory(totals, "update")
 
 
 _SESSION_GAP_MS = 600_000  # 10 min, matching the sessionize family
@@ -787,9 +771,7 @@ def stream_tws_session_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events_stream(spark, sf_dir).withWatermark(
         "ts", "10 minutes"
     )
-    return spark.table(
-        _run_to_memory(_session_gap_stateful(events), "update")
-    )
+    return _run_to_memory(_session_gap_stateful(events), "update")
 
 
 def _session_gap_stateful(events: DataFrame) -> DataFrame:
@@ -918,9 +900,9 @@ def stream_tws_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     HDFS-backed provider hides every state-size cliff.
 
     Same semantics and ORACLE as stream_tws_session_gap; what's new is
-    the harness around it: (1) set-with-restore of the provider +
-    changelog confs (the fn_time_type try/finally pattern — both are
-    per-query runtime confs read at stream start); (2) the fixture is
+    the harness around it: (1) the provider + changelog confs are set
+    under ``scoped_conf`` across each ``.start()`` only — both are
+    per-query runtime confs the query captures when it starts; (2) the fixture is
     drained in TWO phases against ONE checkpoint — phase 1 streams the
     early time-half, the query STOPS, phase 2 starts a NEW query from
     the same checkpoint over the late half — so every user active in
@@ -934,8 +916,6 @@ def stream_tws_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     CORRECTNESS row instead of passing vacuously. Per-user totals are
     max() across both phases' update-mode emissions (n_sessions and
     n_events are monotone nondecreasing)."""
-    prior_provider = spark.conf.get(_PROVIDER_CONF, None)
-    prior_changelog = spark.conf.get(_CHANGELOG_CONF, None)
     lo_dir, hi_dir = _split_events_source(spark, sf_dir)
     base = _stream_scratch("_rocksdb")
     src, ck, out = f"{base}/src", f"{base}/ckpt", f"{base}/out"
@@ -948,41 +928,31 @@ def stream_tws_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _land_updates(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
 
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB_PROVIDER)
-    spark.conf.set(_CHANGELOG_CONF, "true")
-    try:
-        # NO width scoping here: this is the PYTHON-stateful family
-        # (_session_gap_stateful / applyInPandasWithState), whose per-row
-        # cost is the Python worker — narrowing to the state-store-
-        # optimal width serializes the Python work and LOSES (measured:
-        # 13.7s -> 140s at the 10x probe with width 1). RocksDB instance
-        # count follows the session compute width, like the other
-        # Python-stateful drains.
-        for phase_dir in (lo_dir, hi_dir):
-            _link_parts(phase_dir, src)
-            events = (
-                spark.readStream.schema(schema)
-                .parquet(src)
-                .withWatermark("ts", "10 minutes")
-            )
-            q = (
-                _session_gap_stateful(events)
-                .writeStream.outputMode("update")
-                .foreachBatch(_land_updates)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if prior_provider is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prior_provider)
-        if prior_changelog is None:
-            spark.conf.unset(_CHANGELOG_CONF)
-        else:
-            spark.conf.set(_CHANGELOG_CONF, prior_changelog)
+    rocksdb = {_PROVIDER_CONF: _ROCKSDB_PROVIDER, _CHANGELOG_CONF: "true"}
+    # NO width scoping here: this is the PYTHON-stateful family
+    # (_session_gap_stateful / applyInPandasWithState), whose per-row
+    # cost is the Python worker — narrowing to the state-store-optimal
+    # width serializes the Python work and LOSES (measured: 13.7s ->
+    # 140s at the 10x probe with width 1). RocksDB instance count
+    # follows the session compute width, like the other Python-stateful
+    # drains.
+    for phase_dir in (lo_dir, hi_dir):
+        _link_parts(phase_dir, src)
+        events = (
+            spark.readStream.schema(schema)
+            .parquet(src)
+            .withWatermark("ts", "10 minutes")
+        )
+        writer = (
+            _session_gap_stateful(events)
+            .writeStream.outputMode("update")
+            .foreachBatch(_land_updates)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+        )
+        with scoped_conf(spark, rocksdb):
+            q = writer.start()
+        q.awaitTermination()
     n_changelog = sum(
         1
         for _root, _dirs, files in os.walk(f"{ck}/state")
@@ -1026,7 +996,7 @@ def stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = events.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "user_id", "event_type", "value"
     )
-    return spark.table(_run_to_memory(deduped, "append", sf_dir))
+    return _run_to_memory(deduped, "append", sf_dir)
 
 
 @query(
@@ -1076,7 +1046,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return spark.table(_run_to_memory(agg, "complete", sf_dir))
+    return _run_to_memory(agg, "complete", sf_dir)
 
 
 @query(
@@ -1113,7 +1083,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = enriched.groupBy("tier").agg(
         F.count(F.lit(1)).alias("n"), fx_sum("value").alias("sum_value_c")
     )
-    return spark.table(_run_to_memory(agg, "complete", sf_dir))
+    return _run_to_memory(agg, "complete", sf_dir)
 
 
 @query(
@@ -1226,7 +1196,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream-stream joins emit in APPEND mode only (matched rows flow out
     # as soon as both sides arrive; the watermark governs state eviction,
     # not emission, for inner joins)
-    return spark.table(_run_to_memory(pairs, "append", sf_dir))
+    return _run_to_memory(pairs, "append", sf_dir)
 
 
 def _mv_latest_version(state_root: str, below: int | None = None) -> int | None:
@@ -1398,20 +1368,19 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), fx_sum("value").alias("sum_value_c")
     )
-    _COUNTER["n"] += 1
     # input-derived stateful width: the state source below plans one
     # input split per state partition, so the narrow checkpoint also
-    # reads back in width tasks instead of 32 near-empty ones
-    with _scoped_stream_shuffle(spark, sf_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"stream_state_src_{_COUNTER['n']}")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # reads back in width tasks instead of 32 near-empty ones. The rows
+    # come from the checkpoint, not the sink, so the sink is noop.
+    writer = (
+        agg.writeStream.outputMode("complete")
+        .format("noop")
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+    )
+    with scoped_conf(spark, _width_conf(spark, sf_dir)):
+        q = writer.start()
+    q.awaitTermination()
     return spark.read.format("statestore").load(ck).select(
         F.col("key.event_type").alias("event_type"),
         F.col("value.count").cast("long").alias("n"),

@@ -4,16 +4,20 @@ DuckDB-oracle comparison harness mirroring the driver's check
 
 from __future__ import annotations
 
-import math
 import os
+import sys
+from pathlib import Path
 
 import duckdb
-import numpy as np
 import pandas as pd
 import pytest
 
 from ocs_duckdb_runner_spark.registry import TABLES, specs
 from ocs_duckdb_runner_spark.session import build_spark
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+
+from driver_sim import canon  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -66,38 +70,6 @@ def duck():
     con.close()
 
 
-def _canon_val(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, (float, np.floating)):
-        f = float(v)
-        return "NULL" if math.isnan(f) else repr(f)
-    if isinstance(v, (bool, np.bool_)):
-        return repr(bool(v))
-    if isinstance(v, (int, np.integer)):
-        return repr(int(v))
-    if isinstance(v, pd.Timestamp):
-        return "NULL" if pd.isna(v) else v.isoformat()
-    if isinstance(v, (list, tuple, np.ndarray)):
-        return "[" + ",".join(str(_canon_val(x)) for x in v) + "]"
-    if isinstance(v, bytes):
-        return v.hex()
-    try:
-        if pd.isna(v):
-            return "NULL"
-    except (TypeError, ValueError):
-        pass
-    return repr(v)
-
-
-def canon_rows(pdf: pd.DataFrame) -> list[tuple]:
-    """Driver-style canonical form: columns sorted by name, rows as value
-    tuples, sorted — an order-insensitive exact comparison."""
-    pdf = pdf[sorted(pdf.columns)]
-    rows = [tuple(_canon_val(v) for v in row) for row in pdf.itertuples(index=False)]
-    return sorted(rows)
-
-
 def dtype_kinds(pdf: pd.DataFrame) -> dict[str, str]:
     return {c: pdf[c].dtype.kind for c in sorted(pdf.columns)}
 
@@ -119,7 +91,7 @@ def assert_matches_oracle(spark, duck, name: str, sf_dir: str = SF_DIR) -> None:
         f"{name}: column mismatch spark={sorted(got.columns)} oracle={sorted(want.columns)}"
     )
     assert len(got) == len(want), f"{name}: row count spark={len(got)} oracle={len(want)}"
-    g, w = canon_rows(got), canon_rows(want)
+    g, w = canon(got), canon(want)
     if g != w:
         diffs = [(a, b) for a, b in zip(g, w) if a != b][:5]
         raise AssertionError(
